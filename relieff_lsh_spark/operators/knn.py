@@ -99,6 +99,9 @@ def _group_pairs_cos(pdf: pd.DataFrame) -> pd.DataFrame:
     M = np.stack(pdf["v"].to_numpy())[order]
     n = len(ids)
     ia, ib = np.triu_indices(n, k=1)
+    # a vec_id repeated within a group is not a pair with itself
+    distinct = ids[ia] != ids[ib]
+    ia, ib = ia[distinct], ib[distinct]
     A, B = M[ia], M[ib]
     m = len(ia)
     dot = np.zeros(m)

@@ -41,30 +41,6 @@ from relieff_lsh_spark.sources.catalog import SnapshotCatalog
 STAGES = ("signatures", "candidates", "verified", "components")
 
 
-def _session_cpu_seconds() -> float:
-    """Cumulative usr+sys CPU of every live process in this session (the
-    python driver, the JVM, the python UDF workers). Diagnostic only — used
-    to attribute core-seconds to stages when tuning scaling efficiency."""
-    try:
-        hz = os.sysconf("SC_CLK_TCK")
-        with open(f"/proc/{os.getpid()}/stat") as f:
-            my_sess = int(f.read().rsplit(")", 1)[1].split()[3])
-        total = 0
-        for d in os.listdir("/proc"):
-            if not d.isdigit():
-                continue
-            try:
-                with open(f"/proc/{d}/stat") as f:
-                    parts = f.read().rsplit(")", 1)[1].split()
-                if int(parts[3]) == my_sess:
-                    total += int(parts[11]) + int(parts[12])
-            except OSError:
-                continue
-        return total / hz
-    except Exception:
-        return 0.0
-
-
 class DedupPipeline:
     def __init__(
         self,
@@ -143,11 +119,9 @@ class DedupPipeline:
                 self.metrics[name] = {"skipped": True, **(self.catalog.manifest(name) or {})}
                 return self.catalog.read(name)
             t0 = time.time()
-            cpu0 = _session_cpu_seconds()
             df, counters = fn()
             man = self.catalog.write(name, df, counters=counters)
             man["seconds"] = round(time.time() - t0, 3)
-            man["cpu_core_seconds"] = round(_session_cpu_seconds() - cpu0, 1)
             man["skipped"] = False
             self.metrics[name] = man
             return self.catalog.read(name)

@@ -12,8 +12,43 @@ import os
 
 from pyspark.sql import SparkSession
 
-_DRIVER_MEM = os.environ.get("SPARK_DRIVER_MEM", "16g")
-GC_JVM_FLAGS = "-XX:+AlwaysPreTouch -XX:ParallelGCThreads=8 -XX:ConcGCThreads=2"
+
+def host_cpus() -> int:
+    """Cores this process may use: SPARK_GRAFT_CPUS, else the affinity
+    mask (what `nproc` prints)."""
+    if os.environ.get("SPARK_GRAFT_CPUS"):
+        return int(os.environ["SPARK_GRAFT_CPUS"])
+    return len(os.sched_getaffinity(0))
+
+
+def mem_total_mb(meminfo: str = "/proc/meminfo") -> int:
+    with open(meminfo) as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) // 1024
+    raise ValueError(f"no MemTotal line in {meminfo}")
+
+
+def default_driver_mem(total_mb: int) -> str:
+    """Driver heap when SPARK_DRIVER_MEM is unset: about half of RAM,
+    capped at 16g. The heap is committed and pre-touched at start-up
+    (-Xms = heap, AlwaysPreTouch), so it must leave room for the Python
+    workers; on a host with no swap a larger -Xms kills the JVM before
+    the first job."""
+    return f"{min(16 * 1024, total_mb // 2)}m"
+
+
+def _jvm_flags(driver_mem: str, cpus: int) -> str:
+    # Fixed, pre-touched heap + GC threads capped at the core count: with a
+    # lazily committed heap, G1's parallel GC threads page-fault constantly
+    # (measured: 81% system time at local[32], 2.3x wall-clock), and more
+    # GC threads than cores only contend with the task threads.
+    return (
+        f"-Xms{driver_mem} -XX:+AlwaysPreTouch -XX:ParallelGCThreads={cpus} "
+        f"-XX:ConcGCThreads={min(2, cpus)}"
+    )
+
+
 # Debugging note (2026-08-17): a JVM SIGSEGV inside
 # ~StubRoutines::jlong_disjoint_arraycopy during Arrow UDF stages turned
 # out to be SECONDARY damage from the python worker dying mid-stream over
@@ -49,9 +84,12 @@ def get_spark(
         # Under spark-submit the gateway JVM already carries --master;
         # setting builder.master here would silently override it.
         master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
+    cpus = host_cpus()
     if shuffle_partitions is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS")
-        shuffle_partitions = int(cpus) if cpus else (os.cpu_count() or 8)
+        shuffle_partitions = cpus
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or default_driver_mem(
+        mem_total_mb()
+    )
 
     builder = SparkSession.builder.appName(app_name)
     if master is not None:
@@ -92,16 +130,10 @@ def get_spark(
         # not affect. Measured: the components fixpoint and AQE-materialized
         # verify stages dropped from ~4s to task-bound walls.
         .config("spark.locality.wait", "0")
-        .config("spark.driver.memory", _DRIVER_MEM)
-        # Fixed, pre-touched heap + capped GC threads: with a lazily
-        # committed heap, G1's parallel GC threads page-fault constantly
-        # (measured: 81% system time at local[32], 2.3x wall-clock).
+        .config("spark.driver.memory", driver_mem)
         # Only effective for plain-python launches; spark-submit users pass
         # the same via --driver-memory/--conf (see BENCH/scaling.py).
-        .config(
-            "spark.driver.extraJavaOptions",
-            f"-Xms{_DRIVER_MEM} {GC_JVM_FLAGS}",
-        )
+        .config("spark.driver.extraJavaOptions", _jvm_flags(driver_mem, cpus))
         .config("spark.ui.enabled", "false")
         # Let the planner pick shuffled-hash join where its size conditions
         # hold instead of always preferring sort-merge (guide §3.1): the

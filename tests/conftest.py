@@ -5,7 +5,7 @@ import os
 import pytest
 
 from relieff_lsh_spark.config import DedupConfig
-from relieff_lsh_spark.session import get_spark
+from relieff_lsh_spark.session import get_spark, host_cpus
 from relieff_lsh_spark.sources.corpus import write_corpus
 
 CACHE_DIR = os.path.join(os.path.dirname(__file__), "_data")
@@ -13,13 +13,14 @@ CACHE_DIR = os.path.join(os.path.dirname(__file__), "_data")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="relieff-lsh-tests", master="local[8]", shuffle_partitions=8)
+    n = host_cpus()
+    s = get_spark(app_name="relieff-lsh-tests", master=f"local[{n}]", shuffle_partitions=n)
     yield s
 
 
 @pytest.fixture(scope="session")
 def cfg() -> DedupConfig:
-    return DedupConfig(shuffle_partitions=8)
+    return DedupConfig(shuffle_partitions=host_cpus())
 
 
 def _corpus_dir(n: int, seed: int, pcm_ref: bool) -> str:

@@ -2,15 +2,104 @@
 
 from __future__ import annotations
 
+import numpy as np
+import pytest
+
+import relieff_lsh_spark.operators.components as components
 from relieff_lsh_spark.operators.components import connected_components, pair_recall
 from relieff_lsh_spark.plans.oracle import UnionFind
 
 
+@pytest.fixture
+def star_loop(monkeypatch):
+    """Send every non-empty edge set to the large-star/small-star loop."""
+    monkeypatch.setattr(components, "ONE_TASK_MAX_EDGES", 0)
+
+
 def _run(spark, edges, vertices):
-    e = spark.createDataFrame(edges, ["a", "b"])
+    e = spark.createDataFrame(edges, "a string, b string")
     v = spark.createDataFrame([(x,) for x in vertices], ["clip_id"])
     res = connected_components(e, v)
     return {r["clip_id"]: r["component_id"] for r in res.components.collect()}, res
+
+
+def _union_find(edges, vertices):
+    uf = UnionFind(vertices)
+    for a, b in edges:
+        uf.union(a, b)
+    return {v: uf.find(v) for v in vertices}
+
+
+def _random_sparse():
+    rng = np.random.default_rng(11)
+    vertices = [f"r{i:03d}" for i in range(150)]
+    pairs = rng.integers(0, 150, (110, 2))
+    return [(vertices[i], vertices[j]) for i, j in pairs if i != j], vertices
+
+
+def _path_401():
+    ids = [f"p{i:04d}" for i in range(401)]
+    return [(ids[i], ids[i + 1]) for i in range(400)], ids
+
+
+def _disjoint_cliques():
+    vertices, edges = [], []
+    for c, size in enumerate((2, 3, 5, 8)):
+        members = [f"k{c}_{i}" for i in range(size)]
+        vertices += members
+        edges += [(x, y) for i, x in enumerate(members) for y in members[i + 1:]]
+    return edges, vertices + ["k_lonely"]
+
+
+def _star():
+    leaves = [f"s{i:02d}" for i in range(30)]
+    return [("s99", x) for x in leaves], leaves + ["s99"]
+
+
+def _empty():
+    return [], [f"e{i}" for i in range(5)]
+
+
+def _mixed_case_non_ascii():
+    # byte order: "B" < "Z" < "a" < "b" < "zz" < "É" < "ß" < "ä" < "é" < "Ａ",
+    # unlike a case-folding or locale order
+    vertices = ["zz", "b", "Ａ", "é", "É", "ß", "a", "Z", "B", "ä"]
+    edges = [("zz", "Ａ"), ("Ａ", "é"), ("é", "É"), ("a", "ß"), ("ß", "b"), ("B", "ä")]
+    return edges, vertices
+
+
+GRAPHS = {
+    "random_sparse": _random_sparse,
+    "path_401": _path_401,
+    "disjoint_cliques": _disjoint_cliques,
+    "star": _star,
+    "empty": _empty,
+    "mixed_case_non_ascii": _mixed_case_non_ascii,
+}
+
+
+@pytest.mark.parametrize("graph", list(GRAPHS))
+def test_one_task_matches_star_loop_and_union_find(spark, monkeypatch, graph):
+    edges, vertices = GRAPHS[graph]()
+    one_task, res = _run(spark, edges, vertices)
+    assert res.converged and res.iterations == 0
+    monkeypatch.setattr(components, "ONE_TASK_MAX_EDGES", -1)
+    looped, res = _run(spark, edges, vertices)
+    assert res.converged
+    assert one_task == looped == _union_find(edges, vertices)
+
+
+def test_one_task_edge_budget_boundary(spark, monkeypatch):
+    """The path choice rests on the entry edge count alone: at most
+    ONE_TASK_MAX_EDGES distinct edges take the one-task path."""
+    monkeypatch.setattr(components, "ONE_TASK_MAX_EDGES", 3)
+    ids = [f"b{i}" for i in range(6)]
+    edges = [(ids[i], ids[i + 1]) for i in range(5)]
+    for n_edges, one_task in ((3, True), (4, False)):
+        got, res = _run(spark, edges[:n_edges], ids)
+        assert res.converged
+        assert (res.iterations == 0) == one_task, (n_edges, res.iterations)
+        assert got == _union_find(edges[:n_edges], ids)
 
 
 def test_chain_and_singletons(spark):
@@ -23,9 +112,7 @@ def test_chain_and_singletons(spark):
     assert got["v4"] == "v4" and got["v7"] == "v7"
 
 
-def test_matches_union_find_random(spark):
-    import numpy as np
-
+def test_matches_union_find_random(spark, star_loop):
     rng = np.random.default_rng(3)
     vertices = [f"n{i:03d}" for i in range(120)]
     edges = []
@@ -35,11 +122,7 @@ def test_matches_union_find_random(spark):
             a, b = sorted((vertices[i], vertices[j]))
             edges.append((a, b))
     got, res = _run(spark, edges, vertices)
-    uf = UnionFind(vertices)
-    for a, b in edges:
-        uf.union(a, b)
-    want = {v: uf.find(v) for v in vertices}
-    assert got == want
+    assert got == _union_find(edges, vertices)
     assert res.converged
 
 
@@ -60,7 +143,7 @@ def test_pair_recall_contingency(spark):
     assert m["precision"] == 1.0
 
 
-def test_resume_from_round_checkpoint(spark, tmp_path):
+def test_resume_from_round_checkpoint(spark, tmp_path, star_loop):
     """Kill-mid-fixpoint resume: a run cut off by max_iters leaves persisted
     round state; a fresh call with the same checkpoint_dir continues from it
     (storage-backed, not executor-pinned localCheckpoint blocks)."""
@@ -88,7 +171,7 @@ def test_resume_from_round_checkpoint(spark, tmp_path):
     assert all(c == "p00" for c in got.values())
 
 
-def test_checkpoint_cadence_odd_interval(spark, tmp_path):
+def test_checkpoint_cadence_odd_interval(spark, tmp_path, star_loop):
     """checkpoint_every is honored in rounds even though the loop advances
     the round counter by 2 per pass: with checkpoint_every=3 a long-diameter
     graph must persist a round no later than round 4 (the first pass where
@@ -109,7 +192,7 @@ def test_checkpoint_cadence_odd_interval(spark, tmp_path):
     assert os.path.exists(os.path.join(ckpt, "round_4", "_SUCCESS"))
 
 
-def test_long_path_converges_within_round_cap(spark):
+def test_long_path_converges_within_round_cap(spark, star_loop):
     """Adversarial diameter (round-4 VERDICT optional #7): a path graph of
     diameter 400 >> max_iters=25. Plain min-label propagation needs
     O(diameter) rounds and would hit the cap unconverged — the round-2

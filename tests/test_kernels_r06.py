@@ -132,6 +132,7 @@ def test_minhash_agree_n_matches_hof(spark):
         ([5, 5, 5, 5], [5, 5, 5, 5]),   # 4 agree
         ([1, 2, 3, 4], None),           # NULL side -> NULL
         (None, None),
+        ([1, 2, 3], [1, 2, 3, 4]),      # short array -> NULL, not an error
     ]
     df = spark.createDataFrame(rows, "a: array<bigint>, b: array<bigint>")
     got = df.select(
@@ -140,6 +141,7 @@ def test_minhash_agree_n_matches_hof(spark):
     ).collect()
     for r in got:
         assert r["hof"] == r["unrolled"]
+    assert got[-1]["unrolled"] is None
 
 
 @pytest.mark.usefixtures("spark")
@@ -177,3 +179,18 @@ def test_jaccard_verify_flat_kernel_spark_parity(spark):
     finally:
         dist.intersect_count_u64pairs = orig
     assert flat == perrow and len(flat) > 0
+
+
+def test_group_pairs_cos_skips_repeated_vec_id():
+    """A vec_id listed twice in one label group pairs with the others but
+    never with itself."""
+    import relieff_lsh_spark.operators.knn as knn
+
+    pdf = pd.DataFrame({
+        "label": [1, 1, 1],
+        "vec_id": [5, 7, 5],
+        "v": [np.array([1.0, 0.0]), np.array([0.0, 1.0]), np.array([1.0, 0.0])],
+    })
+    out = knn._group_pairs_cos(pdf)
+    assert list(zip(out["a"], out["b"])) == [(5, 7), (5, 7)]
+    assert (out["cos_raw"] == 0.0).all()

@@ -180,7 +180,10 @@ def test_incremental_components_equal_global_fixpoint(spark, cfg: DedupConfig,
     assert fast == full and len(fast) == 300
     # the last batch (5) auto-compacted, folding the merge log — so the
     # closure fixpoint has NOTHING to do: components() is a pure label read
+    # (iterations is 0 on the one-task path too, so check the log itself)
     assert res.iterations == 0
+    merges = inc._state("comp_merges")
+    assert merges is None or merges.isEmpty()
 
     # work bounds: merge log << edge history; lookups pruned below fanout
     from relieff_lsh_spark.streaming.incremental import BUCKETS
