@@ -11,7 +11,8 @@ dedup pipeline runs on a cached deterministically-generated corpus
 
 Env knobs:
   SPARK_GRAFT_SF_DIR   input dir              (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     local[N] + shuffle width (default 32)
+  SPARK_GRAFT_CPUS     local[N] + shuffle width (default: the cores this
+                       process may use, as `nproc` prints)
   BENCH_QUERIES        comma list to run a subset (default all)
   BENCH_AUDIO_N        corpus size for the audio e2e (default 4000)
 """
@@ -27,9 +28,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from relieff_lsh_spark.session import host_cpus  # noqa: E402
+
 REPO = os.path.dirname(os.path.abspath(__file__))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = host_cpus()
 AUDIO_N = int(os.environ.get("BENCH_AUDIO_N", "4000"))
 
 HEADLINE = [

@@ -9,7 +9,8 @@ re-expressed here as an idiomatic DataFrame pipeline:
     corpus -> fingerprints (Arrow UDFs) -> bands (posexplode)
            -> candidates (band equi-join, salted/capped)
            -> verified (Hamming/Jaccard/substring thresholds, JVM-side)
-           -> components (iterative min-label propagation)
+           -> components (one-task union-find up to 2^20 edges, else
+              alternating large-star/small-star rounds)
 
 No code is ported from the reference; all citations in docstrings are for
 behavioral parity checking only.

@@ -43,37 +43,6 @@ class DedupConfig:
                                 # span of >= substr_k + substr_window - 1 words
                                 # shares a minimizer key
 
-    # --- refinement pass analog (reference refineGroupedGraph, R:181-187;
-    #     SURVEY.md §2.7 L4): a second banding with rotated (half-band-offset)
-    #     boundaries, catching near-threshold pairs whose matching rows
-    #     straddle the primary band cuts. OFF by default: the primary
-    #     OR-construction already clears the 0.99 analytic recall budget
-    #     (text_recall_at_threshold); the reference needs its refine pass
-    #     because its K-NN lists can be incomplete, ours is a threshold test.
-    refine_bands: bool = False
-
-    # --- verify-stage prefilter (tier 1 of the two-tier verify) ---
-    # Candidate pairs only join their (unbounded-width) shingle arrays for
-    # exact-Jaccard verification when at least this many of the bands
-    # (32 x 8 B, already in the signature) agree — or the pair can pass via
-    # another channel. One agreeing band is what MADE it a candidate, so
-    # requiring a second is the cheapest possible "can this pass Jaccard?"
-    # screen: at jaccard_min=0.8 a true pair misses with probability
-    # P(Binom(bands, j^r) <= min_bands - 1) ~ 1.7e-6; a spurious collision
-    # (j <= 0.5) has p_band = j^r <= 0.0625 and is pruned with probability
-    # >= 0.86 before the shingle arrays ever move. The first design used the
-    # full minhash signature (128 x 8 B) as the tier-1 payload — measured
-    # 2.3x verify-stage wall vs the band columns on the n=640k bench, since
-    # 1 KB/side exceeds typical shingle arrays; the band count is both
-    # smaller (256 B) and a TIGHTER screen. With refine_bands on, the
-    # agreement also counts the (bands - 1) rotated band hashes — a pair
-    # whose ONLY collision is a rotated band starts from 1 agreement like
-    # any primary candidate instead of being pruned outright (round-3
-    # ADVICE); the screen is marginally looser over 63 bands than 32
-    # (spurious pass p: 1-(1-p_b)^62 given one collision), which only costs
-    # a few extra tier-2 rows — recall is what the refine pass buys.
-    verify_prefilter_min_bands: int = 2
-
     # --- skew / work budget (maxComparisons analog, reference R:159,173) ---
     bucket_cap: int = 64        # max rows per (band, hash) bucket before action
     salt_factor: int = 8        # hot buckets split into this many sub-buckets
@@ -101,14 +70,6 @@ class DedupConfig:
         # probability 1-(1-j^r)^b. The north_rule demands dup-pair recall
         # >= 0.99, so the banding scheme itself must clear that bar at the
         # configured threshold — checked here, not just asserted empirically.
-        # The rotated second banding needs >= 2 bands (to have a boundary to
-        # rotate across) and >= 2 rows per band (a half-band offset of 0
-        # would just duplicate the primary bands).
-        if self.refine_bands and (self.bands < 2 or self.rows_per_band < 2):
-            raise ValueError(
-                "refine_bands requires bands >= 2 and rows_per_band >= 2 "
-                f"(got bands={self.bands}, rows_per_band={self.rows_per_band})"
-            )
         if self.text_recall_at_threshold < 0.99:
             raise ValueError(
                 f"banded MinHash recall at jaccard_min={self.jaccard_min} is "

@@ -20,7 +20,6 @@ from relieff_lsh_spark.functions.text import (
     band_hashes_expr,
     make_minhash_udf,
     minimizer_keys_from,
-    rotated_band_hashes_expr,
     shingle_hashes_from_tokens,
     token_hashes_expr,
     tokens_expr,
@@ -70,7 +69,7 @@ def clip_signatures(
     df = df.withColumn(
         "substr_keys", minimizer_keys_from(F.col("pos_sub"), cfg.substr_window)
     )
-    cols = [
+    return df.select(
         "clip_id",
         "transcript",
         "codec",
@@ -81,13 +80,4 @@ def clip_signatures(
         "minhash",
         band_hashes_expr(F.col("minhash"), cfg).alias("text_bands"),
         F.size("shingles").alias("n_shingles"),
-    ]
-    if cfg.refine_bands:
-        # fixed-width rotated-band hashes ((bands-1) x 8 B): banding
-        # explodes them and tier-1 verify credits them in the agreement
-        # count, without shipping the 1 KB minhash. Only emitted when the
-        # refine pass is on — downstream consumers key off the column's
-        # presence, so a placeholder would shadow their inline computation.
-        cols.insert(-1, rotated_band_hashes_expr(F.col("minhash"), cfg)
-                    .alias("text_bands_rot"))
-    return df.select(*cols)
+    )

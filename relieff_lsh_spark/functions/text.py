@@ -14,9 +14,8 @@ and the banding is an explicit, inspectable column expression.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -57,21 +56,6 @@ def shingle_hashes_from_tokens(th: Column, k: int) -> Column:
     return F.when(n >= k, sh).otherwise(F.array().cast("array<bigint>"))
 
 
-def shingle_hashes_expr(tokens: Column, k: int, distinct: bool = True) -> Column:
-    """array<bigint> of xxhash64 over word k-shingles. Positional order kept
-    when distinct=False (needed by winnowing). Short/empty texts -> [].
-
-    JVM-side: sequence + transform + slice + concat_ws + xxhash64.
-    """
-    n = F.size(tokens)
-    shingled = F.transform(
-        F.sequence(F.lit(0), n - k),
-        lambda i: F.xxhash64(F.concat_ws(" ", F.slice(tokens, i + 1, k))),
-    )
-    out = F.when(n >= k, shingled).otherwise(F.array().cast("array<bigint>"))
-    return F.array_distinct(out) if distinct else out
-
-
 def minimizer_keys_from(hashes: Column, w: int) -> Column:
     """Winnowing minimizers over an ALREADY-MATERIALIZED positional hash
     column. `hashes` MUST be a plain column reference (not an inline
@@ -91,20 +75,6 @@ def minimizer_keys_from(hashes: Column, w: int) -> Column:
             )
         )
     )
-
-
-def minimizer_keys_expr(tokens: Column, k: int, w: int) -> Column:
-    """Winnowing minimizer keys (document fingerprinting): the min shingle
-    hash of every w-wide window over the positional k-shingle sequence.
-    Any shared verbatim span of >= k+w-1 words shares at least one key —
-    this is the substring-duplicate candidate channel (SURVEY.md §2.9
-    suffix_substr_keys; winnowing per Schleimer et al. 2003, public).
-
-    NOTE: inline form, quadratic per row (see minimizer_keys_from) — kept
-    for small-data tests; production paths stage the positional hashes as a
-    projection column first.
-    """
-    return minimizer_keys_from(shingle_hashes_expr(tokens, k, distinct=False), w)
 
 
 def minhash_params(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
@@ -170,33 +140,6 @@ def make_minhash_udf(cfg: DedupConfig):
     return minhash
 
 
-def rotated_band_hashes_expr(sig: Column, cfg: DedupConfig) -> Column:
-    """array<bigint>[bands-1]: the refine pass's band hashes over
-    half-band-ROTATED boundaries (rotated band bnd covers signature rows
-    [bnd*r + r//2, bnd*r + r//2 + r)) — the analog of the reference's
-    refineGroupedGraph second pass (ReliefFFeatureSelector.scala:181-187).
-    Salted with bnd + cfg.bands so rotated hashes never collide with primary
-    band ids. This ONE expression is shared by the banding join
-    (operators/banding.py) and the tier-1 verify screen (operators/verify.py)
-    so a rotated-band collision is always worth one agreement at verify —
-    without that credit the prefilter would prune exactly the pairs the
-    refine pass exists to surface (round-3 ADVICE, medium)."""
-    r = cfg.rows_per_band
-    off = r // 2
-    n_rot = cfg.bands - 1  # offsets [off, off + n_rot*r) stay in range
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_rot - 1)),
-        lambda bnd: F.xxhash64(
-            F.concat_ws(
-                ",",
-                F.transform(F.slice(sig, bnd * r + off + 1, r),
-                            lambda v: v.cast("string")),
-            ),
-            bnd + cfg.bands,
-        ),
-    )
-
-
 def band_hashes_expr(sig: Column, cfg: DedupConfig) -> Column:
     """array<bigint>[bands]: xxhash64 of each r-row slice of the signature,
     salted with the band index so identical slices in different bands never
@@ -209,33 +152,4 @@ def band_hashes_expr(sig: Column, cfg: DedupConfig) -> Column:
                                          lambda v: v.cast("string"))),
             bnd,
         ),
-    )
-
-
-def text_signatures(corpus: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """corpus -> (clip_id, shingles, minhash, text_bands, substr_keys,
-    n_shingles). Narrow (no shuffle); the `bytes` column never enters.
-    Positional hash arrays are staged as projection columns so downstream
-    window/distinct expressions reference them instead of re-evaluating the
-    hashing (see minimizer_keys_from)."""
-    minhash_udf = make_minhash_udf(cfg)
-    toks = tokens_expr("transcript")
-    staged = corpus.select(
-        "clip_id",
-        shingle_hashes_expr(toks, cfg.shingle_k, distinct=False).alias("pos_sh"),
-        shingle_hashes_expr(toks, cfg.substr_k, distinct=False).alias("pos_sub"),
-    )
-    df = staged.select(
-        "clip_id",
-        F.array_distinct("pos_sh").alias("shingles"),
-        minimizer_keys_from(F.col("pos_sub"), cfg.substr_window).alias("substr_keys"),
-    )
-    df = df.withColumn("minhash", minhash_udf("shingles"))
-    return df.select(
-        "clip_id",
-        "shingles",
-        "substr_keys",
-        "minhash",
-        band_hashes_expr(F.col("minhash"), cfg).alias("text_bands"),
-        F.size("shingles").alias("n_shingles"),
     )

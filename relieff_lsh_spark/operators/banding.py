@@ -30,44 +30,14 @@ from relieff_lsh_spark.config import DedupConfig
 BAND_COLS = ["clip_id", "channel", "band_id", "band_hash"]
 
 
-def text_bands(text_sigs: DataFrame, cfg: DedupConfig) -> DataFrame:
+def text_bands(text_sigs: DataFrame) -> DataFrame:
     """Explode per-clip band-hash arrays; clips with no shingles are dropped
-    (they cannot pass Jaccard verification anyway).
-
-    With cfg.refine_bands, a second banding with half-band-rotated
-    boundaries is unioned in (band_id offset by cfg.bands) — the analog of
-    the reference's refineGroupedGraph second pass (R:181-187): pairs whose
-    agreeing MinHash rows straddle the primary band cuts get a second
-    chance to collide. Purely additive (extra OR-construction bands), so
-    recall can only increase."""
-    base = (
+    (they cannot pass Jaccard verification anyway)."""
+    return (
         text_sigs.where(F.col("n_shingles") > 0)
         .select("clip_id", F.posexplode("text_bands").alias("band_id", "band_hash"))
         .select("clip_id", F.lit("text").alias("channel"), "band_id", "band_hash")
     )
-    if not cfg.refine_bands:
-        return base
-    # The stored fixed-width column (clip_signatures emits it when refine is
-    # on) and the inline expression are the SAME hash (shared expr in
-    # functions/text.py), so verify's tier-1 agreement count sees exactly the
-    # hashes that produced the collision.
-    if "text_bands_rot" in text_sigs.columns:
-        rotated_hashes = F.col("text_bands_rot")
-    else:
-        from relieff_lsh_spark.functions.text import rotated_band_hashes_expr
-
-        rotated_hashes = rotated_band_hashes_expr(F.col("minhash"), cfg)
-    rotated = (
-        text_sigs.where(F.col("n_shingles") > 0)
-        .select("clip_id", F.posexplode(rotated_hashes).alias("rot_id", "band_hash"))
-        .select(
-            "clip_id",
-            F.lit("text").alias("channel"),
-            (F.col("rot_id") + cfg.bands).alias("band_id"),
-            "band_hash",
-        )
-    )
-    return base.unionByName(rotated)
 
 
 def substr_bands(text_sigs: DataFrame) -> DataFrame:
@@ -106,7 +76,7 @@ def exact_bands(corpus: DataFrame) -> DataFrame:
 def all_bands(corpus: DataFrame, text_sigs: DataFrame, audio_sigs: DataFrame,
               cfg: DedupConfig) -> DataFrame:
     return (
-        text_bands(text_sigs, cfg)
+        text_bands(text_sigs)
         .unionByName(substr_bands(text_sigs))
         .unionByName(audio_bands(audio_sigs, cfg))
         .unionByName(exact_bands(corpus))

@@ -157,65 +157,14 @@ def _perms_of(h):
 
 
 def _minhash_expr(shh):
-    """MinHash signature in ONE pass over the shingle-hash array:
-    fold with element-wise least across all N_PERMS lanes.
-
-    Shape matters: the naive array(array_min(transform(shh, perm_i)) for i)
-    references `shh` N_PERMS times, and Catalyst's CollapseProject inlines
-    the hash `transform` that produces shh into every branch — the whole
-    upstream hash chain runs N_PERMS x per shingle (measured 16x: 27s -> 2s
-    at sf0.1 in the md5-shingle era). A single aggregate references shh
-    once, so the collapse stays free.
-
-    History: round 4 measured an Arrow twin of this fold as not-faster;
-    round 6 re-measured after the Horner rewrite (_minhash_fold_kernel,
-    BENCH/r06_minhash_probe.json): the kernel wins ~6% on q_lsh_candidates
-    at sf1x but LOSES 0.2-0.3s/query at sf0.1 where the python-worker round
-    trip dominates — so this JVM fold stays the default and the kernel
-    remains available via mh_kernel=True (scale-dependent choice, recorded
-    both ways)."""
+    """One-pass MinHash fold; its Arrow twin lost at sf0.1 (BENCH/r06_minhash_probe.json)."""
     init = F.array(*[F.lit(MOD).cast("bigint")] * N_PERMS)
     return F.aggregate(
         shh, init, lambda acc, h: F.zip_with(acc, _perms_of(h), lambda a, b: F.least(a, b))
     )
 
 
-_PERM_A = np.array([2 * i + 1 for i in range(N_PERMS)], dtype=np.int64)
-_PERM_B = np.array([7919 * i + 13 for i in range(N_PERMS)], dtype=np.int64)
-
-
-@F.pandas_udf(T.ArrayType(T.LongType()))
-def _minhash_fold_kernel(h1s: pd.Series) -> pd.Series:
-    """Arrow twin of _minhash_expr: per batch, permute every shingle hash in
-    one (N_PERMS x total) int64 matrix and per-row segmented-min via
-    minimum.reduceat (the corpus path's make_minhash_udf shape, round 3).
-    Exact: h < 2^32 and the largest multiplier is 2*N_PERMS-1, so every
-    product stays far below 2^63 — identical integer values to the JVM
-    fold's (h*(2i+1) + (7919i+13)) % MOD lanes; empty rows keep the fold's
-    init value MOD. HOF folds are CodegenFallback (one interpreted
-    16-lane zip_with per SHINGLE); this is one vectorized pass per batch.
-    Equivalence pinned by tests/test_kernels_r06.py; A/B in
-    BENCH/r06_minhash_probe.json."""
-    v = h1s.to_numpy()
-    n = len(v)
-    if n == 0:
-        return pd.Series(np.empty(0, dtype=object))
-    lens = np.fromiter((len(x) for x in v), dtype=np.int64, count=n)
-    out = np.full((n, N_PERMS), MOD, dtype=np.int64)
-    tot = int(lens.sum())
-    if tot:
-        flat = np.concatenate(v)
-        m = (flat[None, :] * _PERM_A[:, None] + _PERM_B[:, None]) % MOD
-        offs = np.zeros(n, dtype=np.int64)
-        np.cumsum(lens[:-1], out=offs[1:])
-        nz = lens > 0
-        out[nz] = np.minimum.reduceat(m, offs[nz], axis=1).T
-    return pd.Series(list(out))
-
-
-def signature_df(
-    docs: DataFrame, keep_shingles: bool = True, mh_kernel: bool = False
-) -> DataFrame:
+def signature_df(docs: DataFrame, keep_shingles: bool = True) -> DataFrame:
     """(doc_id, [sh,] mh, bands): token md5s -> Horner shingle hashes ->
     one-pass 16-lane MinHash fold (over h1) -> band hashes.
 
@@ -232,10 +181,9 @@ def signature_df(
     docstring)."""
     d1 = _shingled(docs)
     keep = ["doc_id", "sh"] if keep_shingles else ["doc_id"]
-    fold = _minhash_fold_kernel if mh_kernel else _minhash_expr
     d3 = d1.select(
         *keep,
-        fold(F.transform(F.col("sh"), lambda s: s["h1"])).alias("mh"),
+        _minhash_expr(F.transform(F.col("sh"), lambda s: s["h1"])).alias("mh"),
     )
     d3 = barrier(d3, eager=False)
     return d3.select(
@@ -276,14 +224,13 @@ def _candidates_from(sig: DataFrame) -> DataFrame:
     )
 
 
-ROT_OFF = ROWS // 2  # rotated-banding offset (the corpus refine pass's
-#                      half-band boundary shift, operators/banding.py)
+ROT_OFF = ROWS // 2  # rotated-banding offset: a half-band boundary shift
 
 
 def _refined_bands_long(sig: DataFrame) -> DataFrame:
-    """Primary bands ∪ (BANDS-1) half-band-ROTATED bands — the corpus refine
-    pass (operators/banding.py; reference refineGroupedGraph,
-    ReliefFFeatureSelector.scala:181-187) in SQL-replayable md5 form.
+    """Primary bands ∪ (BANDS-1) half-band-ROTATED bands — the refine pass
+    (reference refineGroupedGraph, ReliefFFeatureSelector.scala:181-187) in
+    SQL-replayable md5 form.
     Rotated band b hashes mh rows [b*ROWS + ROT_OFF, b*ROWS + ROT_OFF +
     ROWS); band_id offset by BANDS keeps the bucket keyspace disjoint."""
     rot = sig.select(

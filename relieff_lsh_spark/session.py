@@ -120,7 +120,7 @@ def get_spark(
         .config("spark.buffer.size", str(1024 * 1024))
         .config("spark.local.dir", _local_dir())
         # Don't stall task launch on block locality: event-log profiling
-        # (BENCH/stage_profile.py) showed stages over cached/localCheckpoint
+        # (perfbench/spans.py) showed stages over cached/localCheckpoint
         # blocks sitting 3s (the spark.locality.wait default) before their
         # first task launched — pure scheduler idle, paid once per locality
         # level per taskset. In local mode there is exactly one executor so

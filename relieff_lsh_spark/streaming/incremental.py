@@ -108,11 +108,7 @@ from pyspark.sql import functions as F
 
 from relieff_lsh_spark.config import DedupConfig
 from relieff_lsh_spark.functions.signatures import clip_signatures
-from relieff_lsh_spark.operators.banding import (
-    audio_bands,
-    substr_bands,
-    text_bands,
-)
+from relieff_lsh_spark.operators.banding import all_bands
 from relieff_lsh_spark.operators.candidates import band_candidates
 from relieff_lsh_spark.operators.components import ComponentsResult, connected_components
 from relieff_lsh_spark.operators.verify import verify_candidates
@@ -280,20 +276,8 @@ class IncrementalDedup:
     # -- per-batch work ----------------------------------------------------
     def _batch_bands(self, batch: DataFrame, new_sigs: DataFrame) -> DataFrame:
         """All four channels' band rows for the NEW clips only."""
-        exact = batch.select(
-            "clip_id",
-            F.lit("exact").alias("channel"),
-            F.lit(0).alias("band_id"),
-            F.xxhash64("bytes").alias("band_hash"),
-        )
-        return (
-            text_bands(new_sigs, self.cfg)
-            .unionByName(substr_bands(new_sigs))
-            .unionByName(audio_bands(new_sigs, self.cfg))
-            .unionByName(exact)
-            .withColumn(
-                "bucket", F.pmod(F.xxhash64("band_hash"), F.lit(BUCKETS))
-            )
+        return all_bands(batch, new_sigs, new_sigs, self.cfg).withColumn(
+            "bucket", F.pmod(F.xxhash64("band_hash"), F.lit(BUCKETS))
         )
 
     def _update_components(

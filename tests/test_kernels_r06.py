@@ -88,39 +88,6 @@ def test_simhash_pack_kernel_matches_fold_reference():
     assert any(int(got.iloc[i][0]) < 0 for i in range(120))
 
 
-def test_minhash_fold_kernel_matches_reference():
-    def ref(h1s):
-        out = [dd.MOD] * dd.N_PERMS
-        for h in h1s:
-            for i in range(dd.N_PERMS):
-                out[i] = min(out[i], (int(h) * (2 * i + 1) + (7919 * i + 13)) % dd.MOD)
-        return out
-
-    rng = np.random.default_rng(3)
-    rows = [
-        rng.integers(0, 2**32, int(rng.integers(0, 50)), dtype=np.int64)
-        for _ in range(150)
-    ]
-    got = dd._minhash_fold_kernel.func(pd.Series(rows))
-    for i in range(150):
-        assert list(got.iloc[i]) == ref(rows[i])
-    assert any(len(r) == 0 for r in rows)  # empty rows stayed at MOD init
-
-
-@pytest.mark.usefixtures("spark")
-def test_signature_df_kernel_matches_jvm_fold(spark):
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    jvm = sorted(
-        map(tuple, dd.signature_df(docs, keep_shingles=False, mh_kernel=False)
-            .select("doc_id", "mh", "bands").collect())
-    )
-    ker = sorted(
-        map(tuple, dd.signature_df(docs, keep_shingles=False, mh_kernel=True)
-            .select("doc_id", "mh", "bands").collect())
-    )
-    assert jvm == ker and len(jvm) > 0
-
-
 @pytest.mark.usefixtures("spark")
 def test_minhash_agree_n_matches_hof(spark):
     from pyspark.sql import functions as F

@@ -3,26 +3,36 @@
 from __future__ import annotations
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
-from relieff_lsh_spark.config import DedupConfig
+from relieff_lsh_spark.functions.signatures import clip_signatures
 from relieff_lsh_spark.functions.text import (
     band_hashes_expr,
-    make_minhash_udf,
-    minimizer_keys_expr,
-    shingle_hashes_expr,
-    text_signatures,
+    minimizer_keys_from,
+    shingle_hashes_from_tokens,
+    token_hashes_expr,
     tokens_expr,
 )
 from relieff_lsh_spark.plans.oracle import jaccard, shingle_set
 
 
 def _sig_df(spark, cfg, texts):
+    """clip_signatures over text-only rows: NULL bytes/codec quarantine the
+    audio channel (NULL simhash) and leave the text columns intact."""
     df = spark.createDataFrame(
-        [(f"c{i:04d}", t) for i, t in enumerate(texts)], ["clip_id", "transcript"]
+        [(f"c{i:04d}", t, None, None) for i, t in enumerate(texts)],
+        "clip_id string, transcript string, codec string, bytes binary",
     )
-    return text_signatures(df, cfg)
+    return clip_signatures(df, cfg)
+
+
+def _positional_shingles(spark, texts, k):
+    """Positional k-shingle hashes over a staged token-hash column, the way
+    clip_signatures derives them."""
+    th = spark.createDataFrame([(t,) for t in texts], ["transcript"]).select(
+        token_hashes_expr(tokens_expr("transcript")).alias("th")
+    )
+    return th.select(shingle_hashes_from_tokens(F.col("th"), k).alias("pos"))
 
 
 def test_shingle_counts_match_python(spark, cfg):
@@ -34,8 +44,8 @@ def test_shingle_counts_match_python(spark, cfg):
         "  padded   spacing  here and more words  ",
     ]
     rows = (
-        spark.createDataFrame([(t,) for t in texts], ["transcript"])
-        .select(F.size(shingle_hashes_expr(tokens_expr("transcript"), cfg.shingle_k)).alias("n"))
+        _positional_shingles(spark, texts, cfg.shingle_k)
+        .select(F.size(F.array_distinct("pos")).alias("n"))
         .collect()
     )
     got = [r["n"] for r in rows]
@@ -45,6 +55,8 @@ def test_shingle_counts_match_python(spark, cfg):
 
 def test_identical_text_identical_signature(spark, cfg):
     sigs = _sig_df(spark, cfg, ["w1 w2 w3 w4 w5 w6 w7 w8"] * 2).collect()
+    assert [r["simhash"] for r in sigs] == [None, None]
+    assert sigs[0]["n_shingles"] == 4
     assert sigs[0]["minhash"] == sigs[1]["minhash"]
     assert sigs[0]["text_bands"] == sigs[1]["text_bands"]
 
@@ -80,12 +92,8 @@ def test_minimizer_keys_catch_substring(spark, cfg):
     inner = "alpha beta gamma delta epsilon zeta"
     outer = f"pre1 pre2 pre3 {inner} post1 post2"
     rows = (
-        spark.createDataFrame([(inner,), (outer,)], ["transcript"])
-        .select(
-            minimizer_keys_expr(
-                tokens_expr("transcript"), cfg.substr_k, cfg.substr_window
-            ).alias("keys")
-        )
+        _positional_shingles(spark, [inner, outer], cfg.substr_k)
+        .select(minimizer_keys_from(F.col("pos"), cfg.substr_window).alias("keys"))
         .collect()
     )
     k_in, k_out = set(rows[0]["keys"]), set(rows[1]["keys"])
@@ -94,14 +102,8 @@ def test_minimizer_keys_catch_substring(spark, cfg):
 
 def test_minimizer_short_text_still_keyed(spark, cfg):
     rows = (
-        spark.createDataFrame([("a b c d",), ("a b c",), ("",)], ["transcript"])
-        .select(
-            F.size(
-                minimizer_keys_expr(
-                    tokens_expr("transcript"), cfg.substr_k, cfg.substr_window
-                )
-            ).alias("n")
-        )
+        _positional_shingles(spark, ["a b c d", "a b c", ""], cfg.substr_k)
+        .select(F.size(minimizer_keys_from(F.col("pos"), cfg.substr_window)).alias("n"))
         .collect()
     )
     ns = [r["n"] for r in rows]
@@ -118,27 +120,6 @@ def test_band_hash_band_index_salted(spark, cfg):
     df = spark.createDataFrame([([7] * cfg.n_perms,)], ["minhash"])
     row = df.select(band_hashes_expr(F.col("minhash"), cfg).alias("b")).collect()[0]
     assert len(set(row["b"])) == cfg.bands
-
-
-def test_refine_rotated_bands_additive(spark, tiny_corpus_dir):
-    """L4 refine analog: rotated-boundary banding adds bands (recall can
-    only increase) and never perturbs the primary band set."""
-    from relieff_lsh_spark.config import DedupConfig
-    from relieff_lsh_spark.functions.signatures import clip_signatures
-    from relieff_lsh_spark.operators.banding import text_bands
-
-    corpus = spark.read.parquet(f"{tiny_corpus_dir}/corpus.parquet").limit(50)
-    base_cfg = DedupConfig(shuffle_partitions=8)
-    ref_cfg = DedupConfig(shuffle_partitions=8, refine_bands=True)
-    sigs = clip_signatures(corpus, base_cfg).localCheckpoint()
-
-    base = text_bands(sigs, base_cfg)
-    refined = text_bands(sigs, ref_cfg)
-    n_base, n_ref = base.count(), refined.count()
-    # primary 32 bands + 31 rotated bands per clip with shingles
-    assert n_ref > n_base
-    assert refined.where("band_id < 32").count() == n_base
-    assert refined.where("band_id >= 32").count() == n_ref - n_base
 
 
 def test_text_components_clusters_planted_clones(spark):
@@ -173,6 +154,19 @@ def test_text_components_clusters_planted_clones(spark):
 
     expect = Counter(comp.values())
     assert sizes == {c: n for c, n in expect.items() if n >= 2}
+
+
+def test_doc_suite_refined_candidates_superset(spark):
+    """q_lsh_candidates_refined (the refine pass's driver-oracle query) is a
+    superset of the base candidates: rotated bands have a disjoint band_id
+    keyspace, so primary buckets — and their cap decisions — are untouched,
+    and extra OR-bands can only add pairs."""
+    from relieff_lsh_spark.operators import dedup_docs as dd
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    base = {(r["a"], r["b"]) for r in dd.q_lsh_candidates(docs).collect()}
+    refined = {(r["a"], r["b"]) for r in dd.q_lsh_candidates_refined(docs).collect()}
+    assert base <= refined
 
 
 def test_minhash_arrow_kernel_matches_per_row_formula(cfg):
